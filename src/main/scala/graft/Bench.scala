@@ -27,41 +27,7 @@ object Bench {
     // (BENCH_r*.json cpus metadata + the q45/d30 config fingerprint in
     // BASELINE.md)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The contract line below must be the ONLY stdout line. Two guards:
-      // a raised maxToStringFields stops the "Truncated the string
-      // representation of a plan" WARN from ever firing (it polluted the
-      // captured tail in rounds 3-4 and broke the driver's JSON parse),
-      // and ERROR log level (log4j2.properties + setLogLevel) keeps any
-      // other WARN out of the capture window. 10k covers every plan here
-      // (widest is the q24 pivot, far under 1k fields) without the
-      // unbounded-string cost of a huge limit.
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      // AQE posts an explainString-rendered plan description on every plan
-      // update even with the UI off; for the composed deep-plan queries
-      // (d14/d19/d38) that rendering is a measured 4-9% of wall time.
-      // Cap it at 64 KB — an observability bound real deployments set; no
-      // query result changes (A/B in tools/ProfileR11, round 11).
-      .config("spark.sql.maxPlanStringLength", "65536")
-      // shell-fork-free local FS (r19): without libhadoop, every state
-      // store / offset log / fixture file op forks chmod/readlink —
-      // measured at ~75% of the stateful streaming rows' executor time.
-      // See graft.io.NioLocalFileSystem.
-      .config(GraftConf.localFsConf)
-      // NO shuffle-writer override (r20): r19 forced the serialized sort
-      // writer session-wide (GraftConf.shuffleConf) on the strength of a
-      // 4-8-effective-core A/B; the canonical local[32] environment
-      // measured it 2.5x WORSE on the superstep class (q31 2.34 -> 5.88 s,
-      // driver PERF_r19) — Spark's default bypass-vs-sort heuristic was
-      // right at R=32. The conf survives in GraftConf as a documented
-      // deployment knob; the bench runs the defaults it is graded on.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus)
 
     // CPU-availability calibration probe: a fixed single-thread xorshift
     // workload whose wall time depends only on how much CPU the box gives

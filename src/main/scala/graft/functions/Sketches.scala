@@ -244,7 +244,8 @@ object Sketches {
     * without touching either corpus again, the same standing-artifact
     * contract as [[kmvOverlap]] for set overlap.
     *
-    * Accuracy regime (measured, tools/ScaleStress round12): relative
+    * Accuracy regime (measured by the round-12 scale-up probe, SCALE.md
+    * Count-Min entry): relative
     * error ≈ distinct-keys/width, so the estimate is TIGHT for
     * heavy-hitter-dominated streams (100 keys at width 2048 → 1.04× the
     * true 1.25e13 on 50M×75M rows) and a LOOSE-but-sound upper bound on

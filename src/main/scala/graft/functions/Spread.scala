@@ -46,8 +46,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Spread {
 
-  /** Operational escape hatch (and the A/B toggle ProfileR19's
-    * interleaved-arm harness flips): `false` makes both entry points the
+  /** Operational escape hatch (and the toggle of the round-19 interleaved
+    * A/B, BASELINE.md standing notes): `false` makes both entry points the
     * identity. Session-scoped, read per call. */
   private def enabled(df: DataFrame): Boolean =
     df.sparkSession.conf.get("spark.graft.spread.enabled", "true")

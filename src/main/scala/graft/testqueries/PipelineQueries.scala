@@ -2905,7 +2905,7 @@ object PipelineQueries {
     // ANN recall@5 under the oracle: the exact top-k, the LSH top-k, and
     // their per-query intersection all hash-checked — the approximation
     // QUALITY itself becomes a correctness row, not just a probe number
-    // (tools/RecallProbe gives the corpus-level curve).
+    // (SCALE.md's round-10 recall sweep gives the corpus-level curve).
     "d72_ann_recall" -> { (s, dir) =>
       val e = embs(s, dir)
       val queries = e.where(col("vec_id") < 10)
@@ -2928,8 +2928,8 @@ object PipelineQueries {
     // (bands, nprobe) setting: d76 doubles the IVF probe count (nprobe=4
     // — recall must be >= d73's, the probe set is a superset), d77 halves
     // the LSH band width (rb=2: 8 bands of 2 bits — more collisions, more
-    // candidates, higher recall than d72's 4x4). tools/RecallProbe sweeps
-    // the full curves; these rows pin one more point of each under the
+    // candidates, higher recall than d72's 4x4). SCALE.md records the
+    // full round-10 curves; these rows pin one more point of each under the
     // engine-independent oracle.
     "d76_ivf_recall_np4" -> { (s, dir) =>
       val e = embs(s, dir)
